@@ -53,12 +53,22 @@ object Concurrent {
     * whole query forever with no interrupt path; a generous finite
     * default (24 h, override via `-Dgraft.concurrent.timeout.seconds`)
     * keeps every legitimate workload untouched while giving a stuck
-    * deployment a loud TimeoutException instead of a silent hang. */
-  private[graft] def defaultTimeout: scala.concurrent.duration.Duration =
-    scala.concurrent.duration.Duration(
-      sys.props.get("graft.concurrent.timeout.seconds")
-        .map(_.toLong).getOrElse(86400L),
+    * deployment a loud TimeoutException instead of a silent hang. A
+    * value that is not a whole number of seconds falls back to the
+    * default with a warning on stderr: a typo in the property must not
+    * fail every `inParallel` call site. */
+  private[graft] def defaultTimeout: scala.concurrent.duration.Duration = {
+    val seconds = sys.props.get("graft.concurrent.timeout.seconds")
+      .fold(86400L) { raw =>
+        scala.util.Try(raw.trim.toLong).getOrElse {
+          System.err.println("[graft] graft.concurrent.timeout.seconds=" +
+            s"'$raw' is not a whole number of seconds; using 86400")
+          86400L
+        }
+      }
+    scala.concurrent.duration.Duration(seconds,
       java.util.concurrent.TimeUnit.SECONDS)
+  }
 
   /** Run each thunk on its own pooled thread and wait for all;
     * returns results in input order. `parallelism` bounds in-flight
@@ -75,7 +85,8 @@ object Concurrent {
     * still running is the `timeout` hang-breaker: it interrupts the
     * pool (shutdownNow) and throws TimeoutException — by then the
     * caller's state is suspect anyway, which is what the exception
-    * says. */
+    * says. Siblings that had already failed ride on it as suppressed
+    * exceptions, so a root cause is not masked by the timeout. */
   def inParallel[T](thunks: Seq[() => T], parallelism: Int = 4,
                     timeout: scala.concurrent.duration.Duration =
                       defaultTimeout): Seq[T] = {
@@ -108,6 +119,8 @@ object Concurrent {
           // non-daemon pool that pins the JVM
           interrupted = true
           pool.shutdownNow()
+          fs.flatMap(_.value).foreach(_.flatten.failed
+            .foreach(e.addSuppressed))
           throw e
       }
       // every future is complete here; outer Try = the future's own

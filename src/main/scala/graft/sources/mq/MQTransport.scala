@@ -1,7 +1,10 @@
 package graft.sources.mq
 
-import java.nio.charset.{Charset, StandardCharsets}
-import java.nio.file.{Files, Paths, StandardOpenOption}
+import java.nio.{ByteBuffer, CharBuffer}
+import java.nio.channels.FileChannel
+import java.nio.charset.{Charset, CharsetDecoder, CodingErrorAction, StandardCharsets}
+import java.nio.file.{Files, NoSuchFileException, Path, Paths, StandardOpenOption}
+import java.nio.file.attribute.{BasicFileAttributes, FileTime}
 import scala.util.control.NonFatal
 
 /** One message as the queue manager hands it over: MQMD put time
@@ -89,7 +92,7 @@ object MQCcsid {
 }
 
 /** File-backed fake queue: `<dir>/queue.jsonl`, one message per line as
-  * `<putMillis>\t<payload>`; appended over time by tests/producers.
+  * `<putMillis>\t<payload>\n`; appended over time by tests/producers.
   * `<dir>/committed` holds the destructive-get high-water mark (the
   * fake's ack ledger — messages before it are "gone" from the real
   * queue's perspective but kept on disk so replay within a run works,
@@ -98,8 +101,17 @@ object MQCcsid {
   * `charset` decodes payload BYTES (reference A3: the queue hands over
   * bytes in the queue manager's CCSID, not strings).
   *
-  * Not meant to be fast — meant to make the source's offset/commit
-  * machinery fully testable offline.
+  * Only `'\n'`-terminated lines are messages: a producer's large
+  * append reaches the file in several `write()` calls, so a reader can
+  * see a torn last line, which stays invisible until its newline lands.
+  *
+  * Every handle on the same file and charset reads through one
+  * [[FileMQTransport.QueueView]] shared by the JVM (driver and, in
+  * local mode, executor tasks alike), so a fresh handle — each
+  * executor task builds one — starts warm, and a trigger costs one
+  * `stat` plus the decode of what was appended since the last one,
+  * not a parse of the whole queue. See the view for when it re-reads
+  * from byte 0.
   */
 class FileMQTransport(dir: String,
                       charset: Charset = StandardCharsets.UTF_8,
@@ -111,7 +123,7 @@ class FileMQTransport(dir: String,
   /** BOM-free working charset: the generic "UTF-16"/"UTF-32" charsets
     * emit a byte-order mark PER ENCODE, so the append-based `put`
     * would inject a BOM mid-file on every transaction after the first
-    * — decoding to a stray ﻿ that breaks `parse`'s `toLong`.
+    * — decoding to a stray U+FEFF that breaks `parse`'s `toLong`.
     * Normalizing to the explicit big-endian twin keeps both sides of
     * the fake consistent (the no-BOM decode default is BE too). */
   private val cs: Charset = charset.name() match {
@@ -120,50 +132,8 @@ class FileMQTransport(dir: String,
     case _        => charset
   }
 
-  /** The parsed queue, memoized on (size, mtime, fileKey). Without
-    * this the double re-read and re-split its whole backing file on
-    * EVERY depth()/read() call, so at bench scale (a 50k-line queue
-    * probed by hundreds of micro-batch range reads) the ingest-door
-    * throughput numbers measured fixture IO as much as gate cost. An
-    * append changes size and mtime, so the transport's own writes
-    * (append-only by contract) can never hit stale. External writers
-    * are tolerated too (this class decodes their BOMs), and their
-    * usual rewrite — write-temp-then-rename — swaps the inode, which
-    * the fileKey component of the memo key catches even when length
-    * and mtime both collide (round 16, ADVICE). The one residual
-    * blind spot is a same-inode in-place rewrite of identical length
-    * inside the filesystem's mtime granularity — no fixture or
-    * contract behavior performs one, and an external writer that must
-    * do so can touch the mtime forward to invalidate the memo. */
-  // @transient: the memo must not ride Java serialization (FileTime
-  // is not Serializable, and shipping a parsed 50k-line queue with
-  // every task closure would defeat the point); a deserialized copy
-  // starts cold and re-reads on first use.
-  @transient @volatile private var cached:
-    (Long, java.nio.file.attribute.FileTime, AnyRef, Vector[String]) =
-    null
   private def lines(): Vector[String] =
-    if (!Files.exists(queueFile)) Vector.empty
-    else {
-      // ONE stat call yields all three key components (fileKey is
-      // null on filesystems that don't expose one — then the key
-      // degrades to the r15 (size, mtime) form, no worse than before)
-      val attrs = Files.readAttributes(queueFile,
-        classOf[java.nio.file.attribute.BasicFileAttributes])
-      val sz = attrs.size()
-      val mt = attrs.lastModifiedTime()
-      val fk = attrs.fileKey()
-      val c = cached
-      if (c != null && c._1 == sz && c._2 == mt && c._3 == fk) c._4
-      else {
-        val parsed = new String(Files.readAllBytes(queueFile), cs)
-          .stripPrefix("﻿") // tolerate an externally-written BOM
-          .split("\n", -1).toVector.map(_.stripSuffix("\r"))
-          .filter(_.nonEmpty)
-        cached = (sz, mt, fk, parsed)
-        parsed
-      }
-    }
+    FileMQTransport.view(queueFile, cs).lines()
 
   private def parse(line: String): MQRecord = {
     val i = line.indexOf('\t')
@@ -260,6 +230,163 @@ object FileMQTransport {
   /** One JVM-wide put lock: the fake's stand-in for the queue
     * manager's serialization of puts. */
   private val lock = new Object
+
+  /** How many queue views the JVM keeps, least recently used first
+    * out: a suite that opens hundreds of temporary queues must not pin
+    * them all. An evicted queue is re-read from byte 0 on next use. */
+  private[graft] val MaxViews = 16
+
+  private val views =
+    new java.util.LinkedHashMap[(Path, String), QueueView](16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[(Path, String), QueueView]): Boolean =
+        size() > MaxViews
+    }
+
+  /** The JVM's view of `file` decoded with `cs`. */
+  private[graft] def view(file: Path, cs: Charset): QueueView = {
+    val key = (file.toAbsolutePath.normalize, cs.name)
+    views.synchronized {
+      var v = views.get(key)
+      if (v == null) { v = new QueueView(key._1, cs); views.put(key, v) }
+      v
+    }
+  }
+
+  private[graft] def cachedViews: Int = views.synchronized(views.size())
+
+  /** The decoded lines of one queue file, kept current incrementally.
+    *
+    * Each call `stat`s the file once. Unchanged (size, mtime, fileKey):
+    * the cached lines. Grown on the same fileKey: only the new bytes are
+    * decoded — through the same decoder, so a character split across
+    * two appends decodes whole — and whole lines are appended. Lines
+    * are cut on decoded `'\n'` characters, never on raw bytes: UTF-16
+    * carries 0x0A inside characters (U+010A is `01 0A`), and EBCDIC
+    * encodes the newline as 0x25. Decoded characters after the last
+    * newline wait until their line is terminated.
+    *
+    * Before trusting the cached prefix, the bytes of the last consumed
+    * line are read again and compared, so an in-place rewrite that grows
+    * the file and touches that line is caught. A shrink, a new fileKey
+    * (the write-temp-then-rename rewrite) or a changed mtime at
+    * unchanged size re-reads from byte 0. What goes unseen is a
+    * same-inode rewrite that either keeps the size inside the
+    * filesystem's mtime granularity or grows the file while leaving the
+    * last consumed line's bytes in place; appends never do either, and
+    * a rewriting writer can rename a new file into place instead.
+    */
+  private[graft] final class QueueView(file: Path, cs: Charset) {
+    // all fields guarded by `this`
+    private var size = -1L // -1: nothing read yet, or the file vanished
+    private var mtime: FileTime = null
+    private var fileKey: AnyRef = null
+    private var decoder: CharsetDecoder = null
+    private var pos = 0L // bytes handed to the decoder
+    private var pending = "" // decoded characters after the last newline
+    private var checkStart = 0L // raw bytes [checkStart, pos) = `check`
+    private var check = Array.emptyByteArray
+    private var decoded = Vector.empty[String]
+    private var reloadCount = 0L
+
+    /** Complete lines, `\r\n` tolerated, empty lines skipped. */
+    def lines(): Vector[String] = synchronized { refresh(); decoded }
+
+    /** How many times the view dropped what it had read of the file
+      * and re-read it from byte 0. */
+    private[graft] def reloads: Long = synchronized(reloadCount)
+
+    private def refresh(): Unit = {
+      val attrs =
+        try Files.readAttributes(file, classOf[BasicFileAttributes])
+        catch { case _: NoSuchFileException => null }
+      if (attrs == null) {
+        if (size >= 0 || decoded.nonEmpty) reset()
+        size = -1L
+        return
+      }
+      val sz = attrs.size()
+      val mt = attrs.lastModifiedTime()
+      val fk = attrs.fileKey()
+      if (sz == size && mt == mtime && fk == fileKey) return
+      val appended = size >= 0 && fk == fileKey && sz > size
+      var readTo = if (appended) decodeFrom(checkStart, sz) else -1L
+      if (readTo < 0) {
+        if (size >= 0) reloadCount += 1
+        reset()
+        readTo = decodeFrom(0L, sz)
+      }
+      // a file that shrank while it was read is re-read next time
+      size = if (readTo < sz) -1L else sz
+      mtime = mt
+      fileKey = fk
+    }
+
+    private def reset(): Unit = {
+      decoder = cs.newDecoder()
+        .onMalformedInput(CodingErrorAction.REPLACE)
+        .onUnmappableCharacter(CodingErrorAction.REPLACE)
+      pos = 0L
+      pending = ""
+      checkStart = 0L
+      check = Array.emptyByteArray
+      decoded = Vector.empty
+    }
+
+    /** Reads bytes [from, end), checks that they begin with `check`,
+      * and decodes everything past `pos`. Returns where the read ended,
+      * or -1 if the check failed. */
+    private def decodeFrom(from: Long, end: Long): Long = {
+      val buf = ByteBuffer.allocate((end - from).toInt)
+      val ch = FileChannel.open(file, StandardOpenOption.READ)
+      try {
+        while (buf.hasRemaining && ch.read(buf, from + buf.position()) >= 0) ()
+      } finally ch.close()
+      val n = buf.position()
+      val held = (pos - from).toInt
+      if (n < held || !java.util.Arrays.equals(buf.array, 0, held,
+        check, 0, check.length)) return -1L
+      val fromStart = pos == 0L && pending.isEmpty && decoded.isEmpty
+      val in = ByteBuffer.wrap(buf.array, held, n - held)
+      // a per-call builder: one kept across calls would pin the
+      // capacity of the largest read, e.g. a whole queue's first load
+      val text = new java.lang.StringBuilder(pending)
+      val out = CharBuffer.allocate(8192)
+      var more = true
+      while (more) {
+        more = decoder.decode(in, out, false).isOverflow
+        out.flip()
+        text.append(out)
+        out.clear()
+      }
+      pos = from + in.position()
+      if (fromStart && text.length > 0 && text.charAt(0) == '\uFEFF')
+        text.deleteCharAt(0) // an externally written BOM
+      val cut = text.lastIndexOf("\n")
+      if (cut >= 0) {
+        val fresh = Vector.newBuilder[String]
+        var lineStart = 0
+        var last = 0
+        while (lineStart <= cut) {
+          val nl = text.indexOf("\n", lineStart)
+          val l = text.substring(lineStart,
+            if (nl > lineStart && text.charAt(nl - 1) == '\r') nl - 1
+            else nl)
+          if (l.nonEmpty) fresh += l
+          last = lineStart
+          lineStart = nl + 1
+        }
+        // the check window: the last complete line and the held tail
+        checkStart = math.max(from,
+          pos - text.substring(last).getBytes(cs).length)
+        decoded = decoded ++ fresh.result()
+      }
+      pending = text.substring(cut + 1)
+      check = java.util.Arrays.copyOfRange(buf.array,
+        (checkStart - from).toInt, (pos - from).toInt)
+      from + n
+    }
+  }
 }
 
 /** A13: retry-with-backoff around any transport. The reference reacts

@@ -70,6 +70,34 @@ class ConcurrentSpec extends SparkSpec {
     assert(secs < 30.0, s"timeout path took ${secs}s — did not break the hang")
   }
 
+  test("inParallel timeout carries already-failed siblings as suppressed") {
+    val e = intercept[java.util.concurrent.TimeoutException] {
+      Concurrent.inParallel(Seq[() => Unit](
+        () => Thread.sleep(60000),
+        () => throw new IllegalStateException("root cause")),
+        timeout = 500.millis)
+    }
+    assert(e.getSuppressed.map(_.getMessage).toSeq == Seq("root cause"),
+      "the sibling's earlier failure was masked by the timeout")
+  }
+
+  test("a malformed timeout property falls back to the default") {
+    val key = "graft.concurrent.timeout.seconds"
+    val before = sys.props.get(key)
+    try {
+      sys.props(key) = "90s" // a typo: not a whole number of seconds
+      assert(Concurrent.defaultTimeout == 86400.seconds)
+      sys.props(key) = " 120 "
+      assert(Concurrent.defaultTimeout == 120.seconds)
+      // and every call site still works under the typo
+      sys.props(key) = "oops"
+      assert(Concurrent.inParallel(Seq(() => 1, () => 2)) == Seq(1, 2))
+    } finally before match {
+      case Some(v) => sys.props(key) = v
+      case None => sys.props -= key
+    }
+  }
+
   test("emptyLike shares NO logical subtree with its source " +
     "(the torn-row seed contract)") {
     import spark.implicits._

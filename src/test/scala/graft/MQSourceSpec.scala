@@ -649,6 +649,30 @@ class MQSourceSpec extends SparkSpec {
     assert(t.depth() == 3L)
   }
 
+  test("a torn last line is not a message until its newline lands") {
+    // a large put reaches the file in several write() calls, so a
+    // reader can see the file end mid-line (here: mid-character too)
+    val dir = tmpDir("mq-torn")
+    val file = dir.resolve("queue.jsonl")
+    append(dir, (1L, "whole"))
+    val torn = "2\tpart of a löng payload".getBytes(StandardCharsets.UTF_8)
+    val cutAt = torn.indexOf(0xC3.toByte) + 1 // inside the 2-byte ö
+    Files.write(file, torn.take(cutAt), StandardOpenOption.APPEND)
+    val t = new FileMQTransport(dir.toString)
+    assert(t.depth() == 1L)
+    assert(t.read(0L, 2L).map(_.payload).toSeq == Seq("whole"))
+    // a fresh handle (executor task, restarted driver) sees the same
+    assert(new FileMQTransport(dir.toString).depth() == 1L)
+    Files.write(file, torn.drop(cutAt), StandardOpenOption.APPEND)
+    assert(t.depth() == 1L, "still no newline")
+    Files.write(file, "\n".getBytes(StandardCharsets.UTF_8),
+      StandardOpenOption.APPEND)
+    assert(t.depth() == 2L)
+    val recs = t.read(0L, 2L).toSeq
+    assert(recs.map(_.payload) == Seq("whole", "part of a löng payload"))
+    assert(recs.map(_.putMillis) == Seq(1L, 2L))
+  }
+
   test("commit record survives a crash-left empty file (degrades to 0)") {
     val dir = tmpDir("mq-commit-crash")
     append(dir, (1L, "a"), (2L, "b"))
